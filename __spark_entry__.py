@@ -1651,7 +1651,6 @@ def q_ols_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = apply_per_series(
         ev, kernel, "conv_id string, step int, yhat double",
         order_col=["ts", "event_id"],
-        batch_buckets=64,
     )
     return out.select(
         F.col("conv_id").cast("bigint").alias("user_id"), "step", "yhat"
@@ -1835,6 +1834,8 @@ def q_streaming_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from mpnsm_spark.plans.pipeline import parquet_footer_stats
+
     cols = ["user_id", "ts", "event_id", "event_type", "value"]
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     tmp = tempfile.mkdtemp(prefix="stream_row_", dir=shm)
@@ -1871,20 +1872,8 @@ def q_streaming_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregation job (same micros value the agg would return). Linking
     # above is complete for ALL files before this scan, so a stats-less
     # file only costs the Spark fallback, never a missing source file.
-    mx = None
-    for f in files:
-        md = pq.read_metadata(f)
-        ci = md.schema.names.index("ts")
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ci).statistics
-            if st is None or not st.has_min_max:
-                mx = None
-                break
-            mx = st.max if mx is None or st.max > mx else mx
-        else:
-            continue
-        mx = None
-        break
+    maxes = [s["ts_max"] for s in parquet_footer_stats(files)]
+    mx = max(maxes) if maxes and None not in maxes else None
     if mx is None:  # stats-less files: fall back to the Spark aggregation
         mx = ev_ntz.agg(F.max("ts")).collect()[0][0]
     # Sentinel keeps the FILE schema (ts TIMESTAMP_NTZ); the instant math is

@@ -89,16 +89,47 @@ def design_matrix(
     return X
 
 
+def _lu_solve(A: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Gaussian elimination with partial pivoting (LAPACK ``gesv``'s
+    algorithm) written as numpy row operations, so no step goes through a
+    threaded BLAS kernel."""
+    A = np.array(A, dtype=np.float64)
+    b = np.array(b, dtype=np.float64)
+    p = len(b)
+    for k in range(p):
+        piv = k + int(np.argmax(np.abs(A[k:, k])))
+        if A[piv, k] == 0.0:
+            raise np.linalg.LinAlgError("Singular matrix")
+        if piv != k:
+            A[[k, piv]] = A[[piv, k]]
+            b[[k, piv]] = b[[piv, k]]
+        f = A[k + 1 :, k] / A[k, k]
+        A[k + 1 :, k:] -= f[:, None] * A[k, k:]
+        b[k + 1 :] -= f * b[k]
+    x = np.empty(p)
+    for k in range(p - 1, -1, -1):
+        x[k] = (b[k] - (A[k, k + 1 :] * x[k + 1 :]).sum()) / A[k, k]
+    return x
+
+
 def _solve_ridge(X: np.ndarray, y: np.ndarray, ridge: float) -> np.ndarray:
     """Normal equations with a tiny ridge on everything but the intercept —
     keeps the solve deterministic and non-singular when a hinge column is
-    (near-)collinear with the trend."""
-    XtX = X.T @ X
+    (near-)collinear with the trend.
+
+    Both products and the solve are fixed-order numpy row operations, never
+    BLAS/LAPACK: OpenBLAS splits ``X.T @ X`` and ``np.linalg.solve`` across
+    its threads, so their last bits depend on the thread count (one thread
+    in Spark's Python workers, every core on the driver) and a refit in
+    another process would not be bit-identical. The basis is a handful of
+    columns, so the ``n × p × p`` product and the ``p × p`` elimination cost
+    nothing next to the fit."""
+    XtX = (X[:, :, None] * X[:, None, :]).sum(axis=0)
     if ridge > 0:
         damp = np.full(X.shape[1], ridge)
         damp[0] = 0.0
         XtX = XtX + np.diag(damp)
-    return np.linalg.solve(XtX, X.T @ y)
+    return _lu_solve(XtX, (X * y[:, None]).sum(axis=0))
 
 
 @dataclass

@@ -70,7 +70,6 @@ def fit_model_states(
     value_col: str = "value",
     target: str | None = None,
     min_train: int = 8,
-    batch_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """Fit :class:`TrendSeasonalOLS` per series and emit ONE state row each.
 
@@ -117,7 +116,6 @@ def fit_model_states(
         MODEL_STATE_SCHEMA,
         key=key,
         order_col=order_col,
-        batch_buckets=batch_buckets,
     )
 
 
@@ -241,7 +239,6 @@ def fit_missing_model_states(
     value_col: str = "value",
     target: str | None = None,
     min_train: int = 8,
-    batch_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """Warm start: fit ONLY series absent from the store, append them, return
     the full current state set (cache_feat semantics,
@@ -271,7 +268,6 @@ def fit_missing_model_states(
             value_col=value_col,
             target=tgt,
             min_train=min_train,
-            batch_buckets=batch_buckets,
         )
         save_model_states(tio, new_states, table, meta={"target": tgt})
     return load_model_states(spark, tio, table, target=tgt)

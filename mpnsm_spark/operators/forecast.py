@@ -44,7 +44,6 @@ def stepwise_predict(
     b_col: str = "b",
     min_train: int = 3,
     with_debug: bool = False,
-    batch_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """Per-series stepwise walk: ``horizon`` steps, predictions fed back.
 
@@ -95,7 +94,6 @@ def stepwise_predict(
         STEPWISE_DEBUG_SCHEMA if with_debug else STEPWISE_SCHEMA,
         key=key,
         order_col=order_cols,
-        batch_buckets=batch_buckets,
     )
 
 
@@ -116,7 +114,6 @@ def forecast_trend_seasonal(
     value_col: str = "value",
     min_train: int = 8,
     with_debug: bool = False,
-    batch_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """Per-series changepoint-aware OLS trend+seasonal forecast — the
     engine's real model (reference ``model.py:417-442`` fit +
@@ -170,5 +167,4 @@ def forecast_trend_seasonal(
         FORECAST_DEBUG_SCHEMA if with_debug else FORECAST_SCHEMA,
         key=key,
         order_col=order_cols,
-        batch_buckets=batch_buckets,
     )

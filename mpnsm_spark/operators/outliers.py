@@ -219,7 +219,6 @@ def changepoints(
     min_distance: int = 3,
     smooth_window: int = 3,
     value_col: str = "value_avg",
-    batch_buckets: int | str | None = "auto",
 ) -> DataFrame:
     """Top-k changepoints per series with a minimum bucket distance.
 
@@ -234,12 +233,10 @@ def changepoints(
     ops both sides), and candidate order is (score desc, position asc).
     Only the default ``smooth_window=3`` has the SQL twin.
 
-    Changepoint inputs are MANY SMALL series (one tier row per bucket), so by
-    default the kernel is bucket-batched (``batch_buckets="auto"`` →
-    2 × defaultParallelism buckets, resolved at call time): Spark pays
-    one Arrow/Python round-trip per bucket instead of per series, with
-    identical per-series results. Pass ``batch_buckets=None`` for the
-    one-group-per-series plan.
+    Changepoint inputs are MANY SMALL series (one tier row per bucket) —
+    the regime the runner's batched plan is built for: Spark pays one
+    Arrow/Python round-trip per hash batch instead of per series
+    (:func:`~mpnsm_spark.operators.skew.apply_per_series`).
     """
     if smooth_window != 3:  # pragma: no cover - SQL twin pins the default
         raise ValueError("changepoints: only smooth_window=3 is supported")
@@ -270,5 +267,4 @@ def changepoints(
         kernel,
         CHANGEPOINT_SCHEMA,
         order_col="bucket_start",
-        batch_buckets=batch_buckets,
     )

@@ -15,9 +15,13 @@ stalls a worker — the same pathology as a hot ``conv_id`` in a
    ≤ threshold rows. Results are re-merged by an associative combine
    (e.g. ``rollup.merge_partials``) — safe for all tier columns by design.
 
-Everything here is declarative Spark SQL; the only custom piece is the
-``apply_per_series`` wrapper, the engine's analog of mpnsm's per-series
-parallel fitting loop (SURVEY.md §2.10 F1).
+Everything here is declarative Spark SQL; the only custom piece is
+``apply_per_series``, the engine's analog of mpnsm's per-series parallel
+fitting loop (SURVEY.md §2.10 F1) and its ONE grouped-map kernel runner:
+every public per-series operator and every pipeline kernel stage crosses the
+Python/Arrow boundary through it. It has one per-series wrapper, two plan
+shapes (hash-batched by default, sub-split for hot series) and two error
+channels (``raise``, or ``mark``: per-series ``_status``/``_error`` rows).
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from collections.abc import Callable
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def with_salt(df: DataFrame, num_buckets: int, key: str = "conv_id") -> DataFrame:
@@ -132,8 +137,6 @@ def _schema_column_names(output_schema) -> list[str]:
     # types that contain commas — decimal(20,6), map<string,int>, struct<...>
     # (ADVICE r3).
     if isinstance(output_schema, str):
-        from pyspark.sql.types import StructType
-
         return StructType.fromDDL(output_schema).fieldNames()
     return [f.name for f in output_schema.fields]
 
@@ -146,107 +149,107 @@ def apply_per_series(
     key: str = "conv_id",
     order_col: str = "turn_idx",
     on_error: str = "raise",
-    error_acc=None,
-    batch_buckets: int | str | None = None,
 ) -> DataFrame:
-    """Run a pandas kernel once per conversation — mpnsm's flagship operator
-    (per-series joblib loop → ``groupBy(conv_id).applyInPandas``).
+    """Run a pandas kernel once per series — mpnsm's flagship operator
+    (per-series joblib loop → grouped-map ``applyInPandas``) and the engine's
+    only per-series runner: public operators and pipeline kernel stages
+    (:func:`~mpnsm_spark.plans.pipeline.run_kernel_stage`) all call it.
 
-    ``fn`` receives the group's rows sorted by ``order_col`` and must return a
+    ``fn`` receives the series' rows sorted by ``order_col`` and must return a
     DataFrame matching ``output_schema`` **plus carry the key column through**.
-    With ``split_threshold``, hot conversations are sub-split and ``fn`` runs
-    per (conv, sub-range) — only safe when the caller's downstream re-merge is
-    associative (tier rollups are; arbitrary kernels may not be).
+    Null-key rows form one series of their own, as in ``groupBy(key)``.
 
-    Per-series error isolation (reference: a failed series returns an empty
-    frame instead of failing the job, ``/root/reference/mpnsm/time_series/
-    deprecated/ts_model.py:1258-1260``): with ``on_error="skip"`` a kernel
-    exception yields an empty result for that series only; pass an
-    ``error_acc`` (``spark.sparkContext.accumulator(0)``) to count poisoned
-    series so the driver can emit ``status='error'`` lineage rows.
+    Plan shapes, picked from the arguments:
 
-    ``batch_buckets`` amortizes the per-group Arrow/Python round-trip for
-    workloads of MANY SMALL series (applyInPandas pays one Arrow transfer and
-    one Python invocation per group — pure overhead when groups are tiny):
-    the shuffle key becomes ``pmod(xxhash64(key), batch_buckets)`` and the
-    kernel wrapper loops series inside one batch with a pandas groupby, so
-    per-series semantics (sort by ``order_col``, per-series error isolation,
-    null-key groups) are preserved exactly while Python is invoked
-    ~#series/batch_buckets times less. Pass the string ``"auto"`` (the public
-    operators' default) to derive ``2 × defaultParallelism`` at call time —
-    a hardcoded count would cap grouped-map parallelism on large clusters
-    (ADVICE r4); 2× leaves headroom for the ~1/e empty-partition rate hash
-    collisions produce at B≈#tasks. Mutually exclusive with
-    ``split_threshold`` (hot-series splitting implies groups are big, the
-    opposite regime).
+    - **batched** (default): the shuffle key is
+      ``pmod(xxhash64(key), 2 × defaultParallelism)`` and the wrapper loops
+      the series of one batch with a pandas groupby. applyInPandas pays one
+      Arrow transfer and one Python call per GROUP, which is pure overhead
+      for many small series; batching pays it ~#series/batches times less.
+      The count is derived at call time: a hardcoded one would cap
+      parallelism on large clusters (ADVICE r4), and 2× leaves headroom for
+      the ~1/e empty-partition rate hash collisions produce at B≈#tasks.
+    - **split** (``split_threshold`` given): hot series are sub-split
+      (:func:`with_sub_splits`) and ``fn`` runs per (key, sub-range) — only
+      safe when the caller's downstream re-merge is associative (tier
+      rollups are; arbitrary kernels may not be).
+
+    Error channel (``on_error``):
+
+    - ``"raise"``: a kernel exception fails the job with the kernel's
+      message;
+    - ``"mark"``: per-series error isolation (reference: a failed series
+      returns an empty frame instead of failing the job,
+      ``mpnsm/time_series/deprecated/ts_model.py:1258-1260``). Output rows
+      gain ``_status="ok"``/``_error=None``; each poisoned kernel call (one
+      per series, one per sub-range under split) emits ONE marker row — its
+      key, nulls elsewhere, ``_status="error"``, ``_error`` = exception
+      class. The channel is plain data, so a retried task recomputes it
+      exactly (an accumulator updated inside a transformation would
+      double-count on retry).
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
-    empty_cols = _schema_column_names(output_schema)
+    if on_error not in ("raise", "mark"):
+        raise ValueError(f"on_error must be 'raise' or 'mark', got {on_error!r}")
+    out_cols = _schema_column_names(output_schema)
+    mark = on_error == "mark"
+    if mark:
+        out_cols = [*out_cols, "_status", "_error"]
+        output_schema = (
+            output_schema + ", _status string, _error string"
+            if isinstance(output_schema, str)
+            else StructType(output_schema.fields)
+            .add("_status", "string")
+            .add("_error", "string")
+        )
+    batched = split_threshold is None
+
+    def run_series(g: pd.DataFrame) -> pd.DataFrame:
+        try:
+            out = fn(g.sort_values(order_col).reset_index(drop=True))
+        except Exception as e:  # noqa: BLE001 — the isolation contract
+            if not mark:
+                raise
+            marker = {c: [None] for c in out_cols}
+            marker[key] = [g[key].iloc[0]]
+            marker["_status"] = ["error"]
+            marker["_error"] = [type(e).__name__]
+            return pd.DataFrame(marker)
+        return out.assign(_status="ok", _error=None) if mark else out
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
 
         tame_arrow_threads()
-        try:
-            return fn(pdf.sort_values(order_col).reset_index(drop=True))
-        except Exception:
-            if on_error == "raise":
-                raise
-            if error_acc is not None:
-                error_acc.add(1)
-            return pd.DataFrame(columns=empty_cols)
-
-    if batch_buckets == "auto":
-        batch_buckets = 2 * df.sparkSession.sparkContext.defaultParallelism
-    if batch_buckets is not None:
-        if split_threshold is not None:
-            raise ValueError("batch_buckets and split_threshold are exclusive")
-
-        def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
-
-            tame_arrow_threads()
-            # dropna=False: pandas groupby silently drops null-key groups by
-            # default, but the non-batched Spark groupBy(key) path DOES run
-            # the kernel on the null group — keep the two paths semantically
-            # identical (ADVICE r4). The helper _batch_id column is dropped
-            # before the kernel sees the group, so fn receives exactly the
-            # columns the non-batched path would pass.
+        if batched:
+            # the helper column never reaches the kernel
             pdf = pdf.drop(columns=["_batch_id"])
-            outs = []
-            for _, g in pdf.groupby(key, sort=False, dropna=False):
-                try:
-                    r = fn(g.sort_values(order_col).reset_index(drop=True))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    if error_acc is not None:
-                        error_acc.add(1)
-                    continue
-                if len(r):  # zero-row frames would upcast dtypes in concat
-                    outs.append(r)
-            if not outs:
-                return pd.DataFrame(columns=empty_cols)
-            return pd.concat(outs, ignore_index=True)
+        # dropna=False: pandas groupby drops null-key groups by default, but
+        # Spark's groupBy(key) keeps them (ADVICE r4).
+        outs = [
+            r
+            for _, g in pdf.groupby(key, sort=False, dropna=False)
+            if len(r := run_series(g))  # zero-row frames upcast dtypes in concat
+        ]
+        if not outs:
+            return pd.DataFrame(columns=out_cols)
+        return pd.concat(outs, ignore_index=True)
 
-        batched = df.withColumn(
-            "_batch_id",
-            F.pmod(F.xxhash64(F.col(key)), F.lit(batch_buckets)).cast("int"),
-        )
-        # Explicit repartition(batch_buckets): the grouped-map stage's input
-        # is usually SMALL in bytes but expensive per row in Python, and AQE
-        # coalesces small shuffles down to 1-2 partitions — serializing every
-        # kernel call. A user-specified partition count is exempt from AQE
-        # coalescing, and groupBy reuses the hash distribution (no second
-        # exchange).
-        return (
-            batched.repartition(batch_buckets, "_batch_id")
+    if batched:
+        n_batches = 2 * df.sparkSession.sparkContext.defaultParallelism
+        # Explicit repartition(n_batches): the grouped-map input is usually
+        # SMALL in bytes but expensive per row in Python, and AQE coalesces
+        # small shuffles down to 1-2 partitions — serializing every kernel
+        # call (measured 5-7x the batched plan on many-small-series inputs).
+        # A user-specified partition count is exempt from AQE coalescing,
+        # and groupBy reuses the hash distribution (no second exchange).
+        grouped = (
+            df.withColumn(
+                "_batch_id",
+                F.pmod(F.xxhash64(F.col(key)), F.lit(n_batches)).cast("int"),
+            )
+            .repartition(n_batches, "_batch_id")
             .groupBy("_batch_id")
-            .applyInPandas(run_batch, output_schema)
         )
-
-    if split_threshold is None:
-        return df.groupBy(key).applyInPandas(run, output_schema)
+        return grouped.applyInPandas(run, output_schema)
     sub = with_sub_splits(df, split_threshold, key=key, order_col=order_col)
     return sub.groupBy(key, "sub_id").applyInPandas(run, output_schema).drop("sub_id")

@@ -38,14 +38,12 @@ Execution model (why this scales):
   its cached output is handed directly to dependent stages — no storage
   read-back, no dedupe window. Storage reads (with keep-last dedupe) happen
   only on resume, where prior snapshots exist.
-- **Stage DAG, parallel by default**: the independent 1h/1d branches,
-  chunks and retention overlap from concurrent driver threads so the next
-  stage's tasks back-fill executors freed by the current stage's tail
-  (guide §2.6). Re-measured this round after the per-stage overhead cuts:
-  parallel 6.1s vs serial 14.0s at bench scale (an earlier serial default
-  dated from when heavier stages contended; ``MPNSM_SERIAL_DAG=1`` or
-  ``parallel_stages=False`` restores it). Lineage commits are always
-  async; TableIO commits are lock-serialized.
+- **Parallel stage DAG**: the independent 1h/1d branches, chunks and
+  retention overlap from concurrent driver threads so the next stage's
+  tasks back-fill executors freed by the current stage's tail (guide §2.6;
+  measured parallel 6.1s vs serial 14.0s at bench scale, 2M turns,
+  local[32]). Lineage commits are async; TableIO commits are
+  lock-serialized.
 - The wave loop is over salt buckets (a driver-side int list, not data); each
   wave is one declarative Spark job over ``bucket_id IN (...)``. The only
   full raw scans are tier-1m (fused with the dedupe) and the map-only
@@ -69,7 +67,7 @@ from mpnsm_spark.generator import with_value
 from mpnsm_spark.operators.gapfill import gapfill_anchored
 from mpnsm_spark.operators.gorilla import encode_tier_chunks
 from mpnsm_spark.operators.rollup import cascade, rollup_encoded, rollup_raw
-from mpnsm_spark.operators.skew import with_salt
+from mpnsm_spark.operators.skew import apply_per_series, with_salt
 from mpnsm_spark.sources.tableio import TableIO
 
 LINEAGE_TABLE = "lineage"
@@ -275,15 +273,6 @@ class PipelineConfig:
     # count(), and the session timezone must be UTC. Set False to force the
     # row-level rewrite unconditionally.
     file_level_retention: bool = True
-    # Run independent stages from concurrent driver threads. Default ON
-    # (re-measured this round): the round-4 "2x worse" reading predated the
-    # batched kernel stages and leaner per-stage commits — the small 1h/1d
-    # branch stages are now overhead-bound (~0.7-0.9s each, write + stats
-    # jobs), and overlapping them back-fills executors freed by the big
-    # stages' tails (guide §2.6). Gated A/B at bench scale (2M turns,
-    # local[32]): serial 14.0s vs parallel 6.1s warmed, 21.6 vs 17.5 cold.
-    # MPNSM_SERIAL_DAG=1 forces serial regardless.
-    parallel_stages: bool = True
     # Per-series kernel stages run after the tier DAG with per-bucket error
     # lineage: a poisoned series yields a status="error" lineage row (stage,
     # bucket_id, error class) instead of failing the run, and only errored
@@ -621,11 +610,12 @@ def run_kernel_stage(
 
     Resume reprocesses ONLY buckets without an ok row — i.e. exactly the
     errored (or never-run) buckets; clean buckets keep their committed
-    snapshots. Everything is one distributed applyInPandas pass; the error
-    channel rides in two extra columns, no accumulator races, no second job.
+    snapshots. The kernel runs through the engine's one per-series runner,
+    :func:`~mpnsm_spark.operators.skew.apply_per_series` with
+    ``on_error="mark"`` (batched plan, or the sub-split plan when the stage
+    sets ``split_threshold``): one distributed pass whose error channel
+    rides in two extra columns — no accumulator, no second job.
     """
-    import pandas as pd
-
     cfg = cfg or PipelineConfig()
     t0 = time.time()
     spark.sparkContext.setJobDescription(f"mpnsm:{stage.name}")
@@ -649,81 +639,15 @@ def run_kernel_stage(
     salted = src if "bucket_id" in src.columns else with_salt(src, cfg.num_buckets, key=key)
     if len(remaining) < cfg.num_buckets:
         salted = salted.filter(F.col("bucket_id").isin([int(b) for b in remaining]))
-    # Real DDL parse — comma-splitting breaks on decimal(20,6)/map/struct
-    # types and then the error-isolation marker frame itself mismatches the
-    # schema (ADVICE r3).
-    from mpnsm_spark.operators.skew import _schema_column_names
-
-    out_cols = _schema_column_names(stage.output_schema)
-    aug_schema = stage.output_schema + ", _status string, _error string"
-    fn, order_col = stage.fn, stage.order_col
-    if stage.split_threshold is not None:
-        from mpnsm_spark.operators.skew import with_sub_splits
-
-        salted = with_sub_splits(
-            salted.drop("bucket_id"),
-            stage.split_threshold,
-            key=key,
-            order_col=order_col,
-        )
-        salted = with_salt(salted, cfg.num_buckets, key=key)
-
-    def wrapped(pdf: pd.DataFrame) -> pd.DataFrame:
-        from mpnsm_spark.functions.arrowcfg import tame_arrow_threads
-
-        tame_arrow_threads()
-        k = pdf[key].iloc[0]
-        try:
-            out = fn(pdf.sort_values(order_col).reset_index(drop=True))
-            out = out.copy()
-            out["_status"] = "ok"
-            out["_error"] = None
-            return out
-        except Exception as e:  # noqa: BLE001 — the isolation contract
-            marker = {c: [None] for c in out_cols}
-            marker[key] = [k]
-            marker["_status"] = ["error"]
-            marker["_error"] = [type(e).__name__]
-            return pd.DataFrame(marker)
-
-    if stage.split_threshold is None:
-        # Batch-bucketed grouped map (skew.apply_per_series pattern): a plain
-        # groupBy(key).applyInPandas shuffle is small in BYTES, so AQE
-        # coalesces it to 1-2 partitions and every per-series kernel call
-        # serializes on one task while paying a per-group Arrow round-trip
-        # (measured 5-7x the batched plan on many-small-series inputs). The
-        # explicit repartition is exempt from AQE coalescing; the wrapper
-        # loops series inside each batch with identical per-series semantics
-        # (sort by order_col, per-series error markers, null-key groups).
-        n_batches = 2 * spark.sparkContext.defaultParallelism
-
-        def wrapped_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.drop(columns=["_batch_id"])
-            outs = []
-            for _, g in pdf.groupby(key, sort=False, dropna=False):
-                r = wrapped(g)
-                if len(r):  # zero-row frames would upcast dtypes in concat
-                    outs.append(r)
-            if not outs:
-                return pd.DataFrame(columns=[*out_cols, "_status", "_error"])
-            return pd.concat(outs, ignore_index=True)
-
-        out = (
-            salted.drop("bucket_id")
-            .withColumn(
-                "_batch_id",
-                F.pmod(F.xxhash64(F.col(key)), F.lit(n_batches)).cast("int"),
-            )
-            .repartition(n_batches, "_batch_id")
-            .groupBy("_batch_id")
-            .applyInPandas(wrapped_batch, aug_schema)
-        )
-    else:
-        out = (
-            salted.drop("bucket_id")
-            .groupBy(key, "sub_id")
-            .applyInPandas(wrapped, aug_schema)
-        )
+    out = apply_per_series(
+        salted.drop("bucket_id"),
+        stage.fn,
+        stage.output_schema,
+        split_threshold=stage.split_threshold,
+        key=key,
+        order_col=stage.order_col,
+        on_error="mark",
+    )
     if cfg.ephemeral:
         # One-shot mode: same kernel, same per-series error isolation (error
         # marker rows drop out), but the output frame goes straight back to
@@ -961,20 +885,24 @@ def run_pipeline(
         with lock:
             stage_seconds[stage] = round(time.time() - t0, 3)
 
-    def tier_source(tier: str) -> tuple[DataFrame, bool]:
-        """(df, clustered): cached fresh output when this run produced all
-        buckets (hash-partitioned by conv_id end-to-end — the single
-        exchange), else storage read with keep-last dedupe (resume path,
-        NOT clustered). Always the STORED (mask-only) schema so every
-        snapshot of a tier table is uniform."""
+    def tier_source(tier: str) -> DataFrame:
+        """Tier rows hash-partitioned by conv_id: the cached fresh output
+        when this run produced all buckets (clustered end-to-end by the
+        single exchange), else the storage read with keep-last dedupe
+        (resume path), repartitioned by conv_id once here. Every consumer —
+        cascades, gap-fill, chunk encode — relies on that clustering: a
+        resumed 1h/1d cascade grouped from an unclustered read comes out
+        partitioned by (conv_id, bucket), and the chunk encode would split
+        one (conv_id, chunk_id) over several rows. Always the STORED
+        (mask-only) schema so every snapshot of a tier table is uniform."""
         with lock:
             df = fresh_outputs.get(f"tier_{tier}")
         if df is not None:
-            return df.drop("_v"), True
+            return df.drop("_v")
         stored = _latest_snapshot(io.read(spark, f"tier_{tier}")).drop(
             "tools", "distinct_tools"
         )
-        return with_salt(stored, cfg.num_buckets), False
+        return with_salt(stored.repartition("conv_id"), cfg.num_buckets)
 
     def in_wave(wave):
         if len(wave) == cfg.num_buckets:  # single-wave run: no-op predicate
@@ -990,7 +918,7 @@ def run_pipeline(
 
     def make_cascade(tier: str, parent: str):
         def produce(wave):
-            src, _ = tier_source(parent)
+            src = tier_source(parent)
             src = src.filter(in_wave(wave)).drop("bucket_id")
             return with_salt(cascade(src, tier, tool_vocab), cfg.num_buckets)
 
@@ -999,7 +927,7 @@ def run_pipeline(
     def make_gapfill(tier: str):
         def produce(wave):
             # anchored fast path: tier value_avg is never null (turn_count>=1)
-            src, _ = tier_source(tier)
+            src = tier_source(tier)
             src = src.filter(in_wave(wave)).drop("bucket_id")
             return with_salt(gapfill_anchored(src, tier), cfg.num_buckets)
 
@@ -1007,15 +935,14 @@ def run_pipeline(
 
     def make_chunks(tier: str):
         def produce(wave):
-            src, clustered = tier_source(tier)
-            src = src.filter(in_wave(wave)).drop("bucket_id")
+            src = tier_source(tier).filter(in_wave(wave)).drop("bucket_id")
             out = encode_tier_chunks(
                 src,
                 tier,
                 points_per_chunk=cfg.points_per_chunk,
-                # fresh tier caches are hash-partitioned by conv_id already —
+                # every tier source is hash-partitioned by conv_id already —
                 # the encode's repartition would be a redundant full exchange
-                assume_clustered=clustered,
+                assume_clustered=True,
             )
             return with_salt(out, cfg.num_buckets)
 
@@ -1159,25 +1086,14 @@ def run_pipeline(
             with lock:
                 errors.append(e)
 
-    import os as _os
-
-    serial_dag = (
-        _os.environ.get("MPNSM_SERIAL_DAG") == "1" or not cfg.parallel_stages
-    )
-
     def submit(fn):
-        if serial_dag:
-            guarded(fn)
-            return
         with lock:
             futs.append(ex.submit(guarded, fn))
 
     def submit_async(fn):
-        """Off-critical-path I/O (lineage appends): ALWAYS pooled, even under
-        the serial stage DAG — dependents need the stage's data, never its
-        lineage row, and these 1-file writes otherwise add a serial barrier
-        per stage. The end-of-run wait() drains them before the summary reads
-        the lineage table."""
+        """Off-critical-path I/O (lineage appends): dependents need the
+        stage's data, never its lineage row. The end-of-run wait() drains
+        them before the summary reads the lineage table."""
         def labelled():
             spark.sparkContext.setJobDescription("mpnsm:lineage")
             fn()
@@ -1247,7 +1163,7 @@ def run_pipeline(
     # bucket status="error" in lineage without failing the run.
     kernel_summaries: dict[str, dict] = {}
     for ks in cfg.kernel_stages:
-        src = norm if ks.source == "norm" else tier_source(ks.source)[0]
+        src = norm if ks.source == "norm" else tier_source(ks.source)
         kernel_summaries[ks.name] = run_kernel_stage(spark, io, ks, src, cfg)
 
     t_dag_done = time.time()

@@ -121,6 +121,27 @@ def test_kill_resume_idempotent(spark, transcripts, tmp_path):
         compare_frames(a, b, KEYS, float_cols=FLOATS)
 
 
+def test_resume_after_tier_1m_crash_chunks_match_cold_run(spark, transcripts, tmp_path):
+    """Crash after tier_1m → resume: every chunk table equals a cold run's
+    row for row, one row per (conv_id, chunk_id). The resumed 1h/1d cascades
+    are grouped from a storage read of tier_1m, which must be clustered by
+    conv_id — otherwise the chunk encode splits one chunk over several rows."""
+    io = TableIO(str(tmp_path / "wh_crash"))
+    with pytest.raises(StageFailure):
+        run_pipeline(spark, transcripts, io, _cfg(), fail_after_stage="tier_1m")
+    assert run_pipeline(spark, transcripts, io, _cfg())["integrity_ok"]
+    io_cold = TableIO(str(tmp_path / "wh_crash_cold"))
+    run_pipeline(spark, transcripts, io_cold, _cfg())
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+    for tier in ("1m", "1h", "1d"):
+        resumed = read_chunks(spark, io, tier)
+        assert resumed.count() == resumed.select("conv_id", "chunk_id").distinct().count()
+        assert rows(resumed) == rows(read_chunks(spark, io_cold, tier)), tier
+
+
 def test_resume_noop_when_complete(spark, transcripts, tmp_path):
     io = TableIO(str(tmp_path / "wh4"))
     run_pipeline(spark, transcripts, io, _cfg())

@@ -97,12 +97,18 @@ def test_split_rollup_remerge(transcripts):
     compare_frames(merged, full, ["conv_id", "bucket_start"], float_cols=FLOATS)
 
 
+def _per_series_oracle(pdf: pd.DataFrame, kern) -> list[tuple]:
+    """Driver-side reference: the kernel once per series in plain pandas."""
+    outs = [
+        kern(g.sort_values("turn_idx").reset_index(drop=True))
+        for _, g in pdf.groupby("conv_id", dropna=False)
+    ]
+    return list(pd.concat(outs).itertuples(index=False, name=None))
+
+
 def test_batch_buckets_matches_per_series(spark, transcripts):
-    """Bucket-batched kernels must emit exactly the per-series results."""
-    import pandas as pd
-
-    from mpnsm_spark.operators.skew import apply_per_series
-
+    """The batched runner emits exactly the per-series results of a plain
+    pandas loop over the series."""
     df = transcripts.select("conv_id", "turn_idx", "value")
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -115,52 +121,50 @@ def test_batch_buckets_matches_per_series(spark, transcripts):
         )
 
     schema = "conv_id string, n bigint, first_v double"
-    plain = apply_per_series(df, kern, schema).orderBy("conv_id").collect()
-    batched = (
-        apply_per_series(df, kern, schema, batch_buckets=4)
-        .orderBy("conv_id")
-        .collect()
-    )
-    assert plain == batched
+    got = sorted(tuple(r) for r in apply_per_series(df, kern, schema).collect())
+    assert got == sorted(_per_series_oracle(df.toPandas(), kern))
 
 
 def test_batch_buckets_error_isolation(spark, transcripts):
-    """on_error='skip' must poison only the failing series inside a batch."""
-    import pandas as pd
-
-    from mpnsm_spark.operators.skew import apply_per_series
-
+    """on_error='mark' poisons only the failing series, in both plan shapes:
+    its rows become error markers (key, exception class), every other series
+    keeps its ok rows."""
     df = transcripts.select("conv_id", "turn_idx", "value")
     poison = df.select("conv_id").distinct().orderBy("conv_id").first()[0]
+    everyone = {r[0] for r in df.select("conv_id").distinct().collect()}
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf["conv_id"].iloc[0] == poison:
             raise RuntimeError("boom")
         return pd.DataFrame({"conv_id": [pdf["conv_id"].iloc[0]]})
 
-    acc = spark.sparkContext.accumulator(0)
-    out = apply_per_series(
-        df,
-        kern,
-        "conv_id string",
-        batch_buckets=4,
-        on_error="skip",
-        error_acc=acc,
-    ).collect()
-    got = {r[0] for r in out}
-    everyone = {r[0] for r in df.select("conv_id").distinct().collect()}
-    assert got == everyone - {poison}
-    assert acc.value == 1
+    split = 40
+    poison_groups = (
+        with_sub_splits(df, split)
+        .filter(F.col("conv_id") == poison)
+        .select("sub_id")
+        .distinct()
+        .count()
+    )
+    assert poison_groups > 1  # the split shape really splits the poison series
+    for split_threshold, n_markers in ((None, 1), (split, poison_groups)):
+        out = apply_per_series(
+            df, kern, "conv_id string", split_threshold=split_threshold,
+            on_error="mark",
+        ).collect()
+        ok = [r for r in out if r["_status"] == "ok"]
+        err = [r for r in out if r["_status"] == "error"]
+        assert {r["conv_id"] for r in ok} == everyone - {poison}
+        assert all(r["_error"] is None for r in ok)
+        assert [(r["conv_id"], r["_error"]) for r in err] == [
+            (poison, "RuntimeError")
+        ] * n_markers
 
 
 def test_batch_buckets_null_key_and_clean_columns(spark):
-    """ADVICE r4: the batched path must (a) run the kernel on null-key groups
-    exactly like the non-batched Spark groupBy path does, and (b) never leak
-    the _batch_id helper column into the kernel's input frame."""
-    import pandas as pd
-
-    from mpnsm_spark.operators.skew import apply_per_series
-
+    """ADVICE r4: the batched runner must (a) run the kernel on the null-key
+    series exactly like a per-series loop does, and (b) never leak the
+    _batch_id helper column into the kernel's input frame."""
     df = spark.createDataFrame(
         [("a", 0, 1.0), ("a", 1, 2.0), (None, 0, 5.0), (None, 1, 7.0)],
         "conv_id string, turn_idx int, value double",
@@ -175,33 +179,33 @@ def test_batch_buckets_null_key_and_clean_columns(spark):
             }
         )
 
-    schema = "conv_id string, vsum double"
-    plain = {
+    got = {
         (r["conv_id"], r["vsum"])
-        for r in apply_per_series(df, kern, schema).collect()
+        for r in apply_per_series(df, kern, "conv_id string, vsum double").collect()
     }
-    batched = {
-        (r["conv_id"], r["vsum"])
-        for r in apply_per_series(df, kern, schema, batch_buckets=4).collect()
+    oracle = {
+        (None if pd.isna(c) else c, v)
+        for c, v in _per_series_oracle(df.toPandas(), kern)
     }
-    assert plain == batched == {("a", 3.0), (None, 12.0)}
+    assert got == oracle == {("a", 3.0), (None, 12.0)}
 
 
 def test_batch_buckets_auto_resolves(spark, transcripts):
-    """batch_buckets='auto' derives 2×defaultParallelism at call time and
-    produces per-series-identical results."""
-    import pandas as pd
-
-    from mpnsm_spark.operators.skew import apply_per_series
-
+    """The runner derives 2×defaultParallelism batches at call time, plans
+    ONE exchange (groupBy reuses the explicit repartition) and produces the
+    per-series results."""
     df = transcripts.select("conv_id", "turn_idx", "value")
 
     def kern(pdf: pd.DataFrame) -> pd.DataFrame:
         return pd.DataFrame({"conv_id": [pdf["conv_id"].iloc[0]], "n": [len(pdf)]})
 
-    schema = "conv_id string, n bigint"
-    auto = apply_per_series(df, kern, schema, batch_buckets="auto")
+    def n_exchanges(d) -> int:
+        plan = d._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        return plan.count("Exchange hashpartitioning")
+
+    out = apply_per_series(df, kern, "conv_id string, n bigint")
+    assert n_exchanges(out) == n_exchanges(df) + 1
     # the resolved bucket count shows up as the shuffle partition count
-    assert auto.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
-    plain = apply_per_series(df, kern, schema).orderBy("conv_id").collect()
-    assert auto.orderBy("conv_id").collect() == plain
+    assert out.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == sorted(_per_series_oracle(df.toPandas(), kern))

@@ -102,12 +102,11 @@ def test_cv_fit_predict_fold_replay(spark, series_df):
 
 
 def test_per_series_error_isolation(spark, series_df):
-    """A poison series fails alone: on_error='skip' completes the job, the
-    accumulator counts the failure, healthy series are untouched
-    (reference deprecated/ts_model.py:1258-1260)."""
+    """A poison series fails alone: on_error='mark' completes the job with
+    one error marker row for it, healthy series are untouched (reference
+    deprecated/ts_model.py:1258-1260); raise mode surfaces the kernel's
+    message."""
     from mpnsm_spark.operators.skew import apply_per_series
-
-    acc = spark.sparkContext.accumulator(0)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf["conv_id"].iloc[0] == "s007":
@@ -117,15 +116,16 @@ def test_per_series_error_isolation(spark, series_df):
         )
 
     out = apply_per_series(
-        series_df,
-        kernel,
-        "conv_id string, n long",
-        on_error="skip",
-        error_acc=acc,
+        series_df, kernel, "conv_id string, n long", on_error="mark"
     ).toPandas()
-    assert acc.value == 1
-    assert "s007" not in set(out["conv_id"])
-    assert len(out) == 59
+    err = out[out["_status"] == "error"]
+    assert err["conv_id"].tolist() == ["s007"]
+    assert err["_error"].tolist() == ["RuntimeError"]
+    assert err["n"].isna().all()
+    ok = out[out["_status"] == "ok"]
+    assert "s007" not in set(ok["conv_id"])
+    assert len(ok) == 59
+    assert ok["_error"].isna().all()
 
     with pytest.raises(Exception, match="poison"):
         apply_per_series(series_df, kernel, "conv_id string, n long").count()
