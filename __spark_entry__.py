@@ -1878,19 +1878,21 @@ def q_streaming_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         mx = ev_ntz.agg(F.max("ts")).collect()[0][0]
     # Sentinel keeps the FILE schema (ts TIMESTAMP_NTZ); the instant math is
     # identical under the UTC-pinned session. Written via pyarrow directly —
-    # one row, no Spark job.
-    sch = pq.read_schema(files[0])
-    sent = pa.table(
-        {
-            "user_id": [-1],
-            "ts": [mx + _dt.timedelta(days=365)],
-            "event_id": [-1],
-            "event_type": ["__flush__"],
-            "value": [0.0],
-        },
-        schema=pa.schema([sch.field(sch.get_field_index(c)) for c in cols]),
-    )
-    pq.write_table(sent, os.path.join(src, "zzz_sentinel.parquet"))
+    # one row, no Spark job. No max ts means no rows and no window to close:
+    # the stream then returns the empty aggregation.
+    if mx is not None:
+        sch = pq.read_schema(files[0])
+        sent = pa.table(
+            {
+                "user_id": [-1],
+                "ts": [mx + _dt.timedelta(days=365)],
+                "event_id": [-1],
+                "event_type": ["__flush__"],
+                "value": [0.0],
+            },
+            schema=pa.schema([sch.field(sch.get_field_index(c)) for c in cols]),
+        )
+        pq.write_table(sent, os.path.join(src, "zzz_sentinel.parquet"))
 
     # watermarks require TIMESTAMP (ltz); the files ship TIMESTAMP_NTZ. The
     # session is UTC-pinned, so the in-stream cast is instant-preserving; the

@@ -452,7 +452,6 @@ def resolve_duplicate_clusters(
     id_b: str = "id_b",
     max_iters: int = 20,
     fixed_iters: int | None = None,
-    pointer_jumping: bool = True,
 ) -> DataFrame:
     """Duplicate pairs → connected components → keep-one-per-cluster.
 
@@ -461,25 +460,29 @@ def resolve_duplicate_clusters(
     duplicate (a∼b, b∼c ⇒ drop two of {a,b,c}). This resolves components by
     min-id label propagation — the standard scalable shape (cf. the
     large-star/small-star CC algorithm, Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14):
+    Components in MapReduce and Beyond", SoCC'14).
 
-    - per round, every node takes ``min(label, min(neighbor labels))`` —
-      one shuffle on the edge key per round (large-star step);
-    - ``pointer_jumping=True`` adds path-halving (``label = min(label,
-      label(label))``, the small-star step) so convergence needs
-      O(log diameter) rounds instead of O(diameter);
-    - rounds stop when no label changes (checked with a cheap count) or at
-      ``max_iters``. ``fixed_iters`` runs EXACTLY that many neighbor-min
-      rounds with no convergence actions and no pointer jumping — the
-      bit-deterministic mode the driver oracle replays by unrolling the same
-      rounds in SQL (correct whenever the graph diameter < fixed_iters; the
-      convergence-checked mode is the production default).
+    The graph is one edge list: both directions of every pair, a self-loop
+    for every pair endpoint and a self-loop for every ``ids`` row. One round
+    is ``edges ⋈ labels (dst = id) → groupBy(src).min(label)``: the loop
+    folds a node's own label into its min, and every node — isolated ids
+    included — is carried through every round, so nothing is joined back
+    afterwards. Labels start as the node's own id, so the first round reads
+    ``min(dst)`` straight off the edge list.
 
-    ``ids`` (optional, one column named like ``id_a``-less ``doc_id``…
-    any single-column frame) adds isolated documents as singleton clusters.
-    When provided it must COVER every pair endpoint (always true for corpus
-    dedup — pairs are found within the corpus); the fixed-iters fast path
-    relies on it.
+    - ``fixed_iters=k`` runs exactly k rounds, lazily: no convergence check,
+      no pointer jumping, one job for the whole chain after the edge list.
+      It is the bit-deterministic mode the driver oracle replays by
+      unrolling the same rounds in SQL; a node's label is the min id within
+      k hops, so it is complete whenever no component's diameter exceeds k.
+    - Otherwise every round also takes path-halving (``label = min(label,
+      label(label))``, the small-star step), so convergence needs
+      O(log diameter) rounds; rounds stop when no label changes (checked
+      with a cheap count) or at ``max_iters``.
+
+    ``ids`` (optional, any single-column frame of document ids) adds
+    isolated documents as singleton clusters. It need not cover the pair
+    endpoints: every endpoint and every id appears in the output once.
 
     Output: ``(doc_id, cluster_id, keep_flag)`` — cluster_id = min doc id of
     the component, keep_flag marks the representative. Labels only ever
@@ -487,129 +490,82 @@ def resolve_duplicate_clusters(
     and partial aggregation; per-round state is one (id, label) row per
     UNIQUE node, never the pair multiset.
     """
-    # Mirror each pair with ONE explode, not a self-union: a union's two
-    # branches duplicate the upstream pair plan in the physical tree, and
-    # ReuseExchange only dedups exchanges — the pair-producing JOIN itself
-    # (the expensive in-bucket quadratic verify for LSH inputs) would execute
-    # TWICE inside the edge materialization job. explode emits both
-    # directions from one execution of the pair plan.
+    # Mirror each pair and add both endpoint loops with ONE explode, not a
+    # union: a union's branches duplicate the upstream pair plan in the
+    # physical tree, and ReuseExchange only dedups exchanges — the
+    # pair-producing JOIN itself (the expensive in-bucket quadratic verify
+    # for LSH inputs) would execute once per branch. A node of degree d gets
+    # d copies of its loop; duplicates cannot change a min.
     edges = pairs.select(
         F.explode(
             F.array(
-                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+                *(
+                    F.struct(F.col(s).alias("src"), F.col(d).alias("dst"))
+                    for s, d in (
+                        (id_a, id_b), (id_b, id_a), (id_a, id_a), (id_b, id_b)
+                    )
+                )
             )
         ).alias("_e")
     ).select("_e.src", "_e.dst")
-    # Materialize the edge list ONCE: every propagation round joins `edges`,
-    # and the upstream pair-finding plan (LSH self-join over a Python embed
-    # stage, say) would otherwise re-execute per round — measured 5x the
-    # whole chain's cost at sf0.1. Edge state is two rows per duplicate pair
-    # (tiny next to the corpus), and localCheckpoint also truncates lineage
-    # so the loop's DAG stays flat at any scale.
-    if fixed_iters is not None and ids is not None:
-        # Fixed-round corpus mode (both driver rows): every pair endpoint is
-        # by construction a corpus id (pairs are FOUND within the corpus), so
-        # labels can start from the ids table directly and each round folds
-        # the node's own label in via a SELF-LOOP edge — one join + one
-        # min-aggregate per round instead of join + aggregate + left-join,
-        # no labels-init job, and no final singleton anti-join (isolated ids
-        # ride through the rounds labelled by their own loop). Identical
-        # labels: min({own} ∪ neighbor labels) per round, and isolated ids
-        # keep label=id — exactly the general path's output.
+    if ids is not None:
         id_col = ids.columns[0]
-        loops = ids.select(
-            F.col(id_col).alias("src"), F.col(id_col).alias("dst")
+        edges = edges.unionByName(
+            ids.select(F.col(id_col).alias("src"), F.col(id_col).alias("dst"))
         )
-        edges = edges.unionByName(loops).localCheckpoint(eager=True)
-        labels = ids.select(
-            F.col(id_col).alias("id"), F.col(id_col).alias("label")
-        )
-        # Each round references `labels` exactly ONCE (one join, one
-        # aggregate), so the whole fixed-round chain stays LAZY: no subtree
-        # duplication, no per-round checkpoint job — the driver submits one
-        # job for all rounds. Plan depth is fixed_iters joins over the
-        # checkpointed edge list (flat lineage).
-        for _ in range(fixed_iters):
-            labels = (
-                edges.join(labels, edges.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("label").alias("label"))
-                .withColumnRenamed("src", "id")
-            )
-        return labels.select(
-            F.col("id").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-            (F.col("id") == F.col("label")).alias("keep_flag"),
-        )
-
+    # Materialize the edge list ONCE: every round joins `edges`, and the
+    # upstream pair-finding plan (LSH self-join over a Python embed stage,
+    # say) would otherwise re-execute per round — measured 5x the whole
+    # chain's cost at sf0.1. Edge state is four rows per duplicate pair plus
+    # one per id (tiny next to the corpus), and localCheckpoint also
+    # truncates lineage so the loop's DAG stays flat at any scale.
     edges = edges.localCheckpoint(eager=True)
-    nodes = edges.select(F.col("src").alias("id")).distinct()
-    labels = nodes.select("id", F.col("id").alias("label")).persist()
-    labels.count()
 
-    n_rounds = fixed_iters if fixed_iters is not None else max_iters
-    for it in range(n_rounds):
-        nb_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nb_label"))
-        )
-        new_labels = (
-            labels.join(nb_min, labels.id == nb_min.src, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("nb_label", F.col("label"))
-                ).alias("label"),
+    rounds = max_iters if fixed_iters is None else fixed_iters
+    if rounds < 1:
+        raise ValueError(f"need at least one round, got {rounds}")
+    labels = None
+    for _ in range(rounds):
+        # (src, label of dst); in the first round every label is its own id
+        hop = (
+            edges
+            if labels is None
+            else edges.join(labels, edges.dst == labels.id).select(
+                "src", F.col("label").alias("dst")
             )
         )
-        if fixed_iters is None and pointer_jumping:
-            l2 = new_labels.select(
-                F.col("id").alias("p_id"), F.col("label").alias("p_label")
-            )
-            new_labels = (
-                new_labels.join(l2, new_labels.label == l2.p_id, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("label"), F.coalesce("p_label", F.col("label"))
-                    ).alias("label"),
-                )
-            )
-        # truncate lineage: each round's frame is small (one row per node)
-        new_labels = new_labels.localCheckpoint(eager=True)
-        if fixed_iters is None:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            labels.unpersist()
-            labels = new_labels
+        new = (
+            hop.groupBy("src")
+            .agg(F.min("dst").alias("label"))
+            .withColumnRenamed("src", "id")
+        )
+        if fixed_iters is not None:
+            # Each round references `labels` exactly once, so the chain
+            # stays LAZY: no per-round job, one plan of k rounds over the
+            # checkpointed edge list.
+            labels = new
+            continue
+        # Every label is the id of a node in `new`, so the inner join keeps
+        # every row.
+        parent = new.select(F.col("id").alias("p_id"), F.col("label").alias("p_label"))
+        new = (
+            new.join(parent, new.label == parent.p_id)
+            .select("id", F.least("label", "p_label").alias("label"))
+            .localCheckpoint(eager=True)
+        )
+        changed = labels is None or (
+            new.alias("n")
+            .join(labels.alias("o"), "id")
+            .filter(F.col("n.label") != F.col("o.label"))
+            .limit(1)
+            .count()
+        )
+        labels = new
+        if not changed:
+            break
 
-    out = labels.select(
+    return labels.select(
         F.col("id").alias("doc_id"),
         F.col("label").alias("cluster_id"),
         (F.col("id") == F.col("label")).alias("keep_flag"),
     )
-    if ids is not None:
-        id_col = ids.columns[0]
-        singletons = (
-            ids.select(F.col(id_col).alias("doc_id"))
-            .join(out.select("doc_id"), "doc_id", "left_anti")
-            .select(
-                "doc_id",
-                F.col("doc_id").alias("cluster_id"),
-                F.lit(True).alias("keep_flag"),
-            )
-        )
-        out = out.unionByName(singletons)
-    return out

@@ -41,6 +41,13 @@ def with_salt(df: DataFrame, num_buckets: int, key: str = "conv_id") -> DataFram
     )
 
 
+# Logical plan nodes (``nodeName()``) that put an exchange into the physical
+# plan; ``fan_out`` never probes a frame that holds one.
+_SHUFFLING_NODES = frozenset(
+    {"Repartition", "RepartitionByExpression", "Join", "Aggregate"}
+)
+
+
 def fan_out(df: DataFrame, key: str, min_partitions: int | None = None) -> DataFrame:
     """Spread a narrow-parallelism input across the cluster BEFORE per-row
     expensive work (heavy expressions, higher-order functions, Python
@@ -61,17 +68,22 @@ def fan_out(df: DataFrame, key: str, min_partitions: int | None = None) -> DataF
     Laziness note: the partition-count probe uses ``df.rdd``, which under
     AQE EXECUTES any exchange already in the plan at build time (a real
     Spark job, re-run again at action time). So a frame whose optimized
-    plan already contains a repartition — e.g. the output of an operator
-    that fanned out internally — is returned unchanged WITHOUT probing:
+    plan holds a node that plans an exchange (``_SHUFFLING_NODES``: a
+    repartition — e.g. the output of an operator that fanned out internally
+    — a join or an aggregate) is returned unchanged WITHOUT probing:
     composition stays lazy and the double-execution cannot happen. The
     probe only runs for exchange-free plans (scans/projections), where
     ``.rdd`` is planning-only.
     """
     sc = df.sparkSession.sparkContext
     n = min_partitions or sc.defaultParallelism
-    plan = df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-    if "Repartition" in plan or "Exchange" in plan:
-        return df
+    stack = [df._jdf.queryExecution().optimizedPlan()]  # noqa: SLF001
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in _SHUFFLING_NODES:
+            return df
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n, F.col(key))

@@ -19,3 +19,25 @@ def transcripts(spark):
     df = df.cache()
     df.count()
     return df
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → ``(fn(), number of Spark jobs fn submitted)``,
+    counted through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()  # noqa: SLF001
+        # job starts reach the status store through the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -83,3 +83,18 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert "conv_id" in df.columns and "bucket_start" in df.columns
+
+
+def test_streaming_row_empty_events(spark, tmp_path):
+    """Zero-row events table: there is no max ts and so no flush sentinel;
+    the stream returns the empty aggregation with the oracle's columns."""
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "events.parquet"
+    pq.write_table(pq.read_schema(f"{SF_DIR}/events.parquet").empty_table(), path)
+    got = entrymod.q_streaming_rollup_1h(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+    want = con.sql(entrymod.oracle_sql()["streaming_rollup_1h"]).df()
+    assert len(got) == len(want) == 0
+    assert list(got.columns) == list(want.columns)

@@ -7,6 +7,7 @@ from mpnsm_spark.operators.rollup import merge_partials, rollup_raw
 from mpnsm_spark.operators.skew import (
     apply_per_series,
     conv_sizes,
+    fan_out,
     with_salt,
     with_sub_splits,
 )
@@ -209,3 +210,12 @@ def test_batch_buckets_auto_resolves(spark, transcripts):
     assert out.rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
     got = sorted(tuple(r) for r in out.collect())
     assert got == sorted(_per_series_oracle(df.toPandas(), kern))
+
+
+def test_fan_out_returns_shuffled_frame_unprobed(spark, count_jobs):
+    """An aggregate already plans an exchange: ``fan_out`` returns the frame
+    itself and submits no job while the query is being built."""
+    counts = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    out, n_jobs = count_jobs(lambda: fan_out(counts, key="k"))
+    assert out is counts
+    assert n_jobs == 0

@@ -269,6 +269,28 @@ def test_refine_centroids_improves_or_matches_recall(spark, emb):
 # ------------------------------------------------ duplicate-cluster resolve
 
 
+def _bfs_clusters(pairs, ids=()) -> dict:
+    """Python oracle: every pair endpoint and every id → min id of its
+    connected component."""
+    adj = {i: set() for i in ids}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    comp = {}
+    for start in sorted(adj):
+        if start in comp:
+            continue
+        stack, seen = [start], {start}
+        while stack:
+            for v in adj[stack.pop()]:
+                if v not in seen:
+                    seen.add(v)
+                    stack.append(v)
+        for u in seen:
+            comp[u] = min(seen)
+    return comp
+
+
 def test_dup_clusters_transitivity_chain(spark):
     """a∼b, b∼c, c∼d: all four land in ONE cluster labeled by the min id,
     exactly one keep_flag — even though no pair connects a to d directly."""
@@ -291,8 +313,9 @@ def test_dup_clusters_transitivity_chain(spark):
 
 def test_dup_clusters_long_chain_and_fixed_iters(spark):
     """A 40-node path graph: pointer jumping converges well under max_iters;
-    fixed_iters=3 (no jumping) matches only up to 3-hop reach — verifying
-    the two modes do what they claim."""
+    fixed_iters=3 (no jumping) matches only up to 3-hop reach, and
+    fixed_iters=41 reaches the whole path — verifying the two modes do what
+    they claim."""
     edges = [(i, i + 1) for i in range(40)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     conv = dedup.resolve_duplicate_clusters(pairs, max_iters=12).toPandas()
@@ -303,6 +326,45 @@ def test_dup_clusters_long_chain_and_fixed_iters(spark):
     # after k neighbor-min rounds a node's label is the min id within k hops
     for node in (0, 5, 20, 40):
         assert lbl[node] == max(0, node - 3)
+    # 41 plain rounds reach across the whole path: the same answer as the
+    # convergence mode
+    full = dedup.resolve_duplicate_clusters(pairs, fixed_iters=41).toPandas()
+    assert full.sort_values("doc_id", ignore_index=True).equals(
+        conv.sort_values("doc_id", ignore_index=True)
+    )
+
+
+def test_dup_clusters_uncovered_ids(spark):
+    """``ids`` need not cover the pair endpoints: 0 is paired but not an id,
+    {7, 8} and {30..33} have no id at all, 3 is an isolated id. Both modes
+    label every endpoint and every id exactly once with the min id of its
+    component."""
+    edges = [(1, 0), (0, 2), (7, 8), (30, 31), (31, 32), (33, 32)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    ids = spark.createDataFrame([(1,), (2,), (3,)], "doc_id long")
+    comp = _bfs_clusters(edges, ids=(1, 2, 3))
+    want = sorted((d, c, d == c) for d, c in comp.items())
+    for kw in ({"fixed_iters": 4}, {}):
+        got = dedup.resolve_duplicate_clusters(pairs, ids=ids, **kw).collect()
+        assert sorted(tuple(r) for r in got) == want, kw
+
+
+def test_dup_clusters_job_counts(spark, count_jobs):
+    """The driver row's graph (2000 ids, d∼d+1 when d % 8 < 3): the fixed
+    mode builds with only the edge-list checkpoint and runs every round in
+    one lazy plan; the convergence mode pays one checkpoint and one change
+    check per round and nothing after."""
+    docs = spark.range(2000).select(F.col("id").alias("doc_id"))
+    pairs = docs.filter(F.col("doc_id") % 8 < 3).select(
+        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
+    ).join(docs.select(F.col("doc_id").alias("id_b")), "id_b", "left_semi")
+    for kw, max_build, max_count in (({"fixed_iters": 4}, 2, 8), ({}, 21, 2)):
+        out, n_build = count_jobs(
+            lambda kw=kw: dedup.resolve_duplicate_clusters(pairs, ids=docs, **kw)
+        )
+        n, n_count = count_jobs(out.count)
+        assert n == 2000
+        assert n_build <= max_build and n_count <= max_count, (kw, n_build, n_count)
 
 
 def test_dup_clusters_singletons_and_real_pairs(spark, docs):
@@ -322,23 +384,7 @@ def test_dup_clusters_singletons_and_real_pairs(spark, docs):
     assert (per == 1).all()
     # python BFS oracle over the same pairs
     pairs = pairs_df.toPandas()
-    adj = {}
-    for a, b in zip(pairs.id_a, pairs.id_b):
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    comp = {}
-    for start in sorted(adj):
-        if start in comp:
-            continue
-        stack, seen = [start], {start}
-        while stack:
-            u = stack.pop()
-            for v in adj.get(u, ()):
-                if v not in seen:
-                    seen.add(v)
-                    stack.append(v)
-        for u in seen:
-            comp[u] = min(seen)
+    comp = _bfs_clusters(zip(pairs.id_a, pairs.id_b))
     for r in got.itertuples(index=False):
         want = comp.get(r.doc_id, r.doc_id)
         assert r.cluster_id == want, (r.doc_id, r.cluster_id, want)
